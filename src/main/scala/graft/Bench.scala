@@ -57,15 +57,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(cpus)
 
     // SPARK_GRAFT_ONLY: comma-separated query names — time just those
     // (iteration aid; the driver never sets it)
@@ -114,7 +106,8 @@ object Bench {
     // original passes; extra spaced samples let min-of-N see through.
     // The adjudication (query, previous, final) is logged to stderr so a
     // reviewer can separate environmental swings from real regressions.
-    val prev = previousCommitted(sfDir, cpus)
+    val (fullArtifact, anchorArtifact) = artifactNames(cpus)
+    val prev = previousCommitted(fullArtifact, sfDir, cpus)
     val swung = queries.filter { case (name, _) =>
       (samplesSoFar.toMap.apply(name).minOption, prev.get(name)) match {
         case (Some(cur), Some(p)) if p > 0 =>
@@ -184,20 +177,7 @@ object Bench {
     // clip-prone line, by design), and stays authoritative in the
     // DURABLE files (target/bench_latest.json + repo-root
     // BENCH_full_latest.json, full precision + spread).
-    val anchors = Seq("summary_count", "basic_stats", "histogram_1d",
-      "heatmap_2d", "heavy_hitters", "approx_distinct", "quantiles",
-      "next_k_page", "filter_count", "join_q3lite", "window_rank",
-      "events_time_window")
-    val rmap = results.toMap
-    val aqs = anchors.flatMap(a => rmap.get(a).map(v =>
-      "\"" + a + "\":" + v.map(fmt3).getOrElse("-1.0"))).mkString("{", ",", "}")
-    // the subset artifact's headline `value` is the SUM OF ITS OWN
-    // queries map (the BASELINE.md §B comparison number) — a reader of
-    // `metric`+`value` must never get the full-catalog total from a file
-    // whose map is the 12-anchor subset (that number lives in
-    // BENCH_full_latest.json, and here under `full_total`)
-    val anchorTotal = anchors.flatMap(a => rmap.get(a).flatten).sum
-    val anchorLine = s"""{"metric":"anchor12_total","value":${fmt3(anchorTotal)},"unit":"sec","queries":$aqs,"full_total":${fmt3(total)},"errors":$errors,"sf":"$sfDir","cpus":$cpus,"subset":"anchor12_of_${results.size}","full":"BENCH_full_latest.json"}"""
+    val anchorLine = anchorLineOf(results.toMap, total, errors, sfDir, cpus)
     val qs3 = results
       .map { case (k, v) => "\"" + k + "\":" + v.map(fmt3).getOrElse("-1.0") }
       .mkString("{", ",", "}")
@@ -229,52 +209,77 @@ object Bench {
     // SPARK_GRAFT_ONLY subset run would silently replace the 100+-query
     // record with its few rows
     if (sys.env.get("SPARK_GRAFT_BENCH_OUT").isEmpty && only.isEmpty) {
-      // the committed round record is the 32-core run; the driver's c8
-      // scaling sweep runs SECOND and used to clobber it (r20 lost its
-      // c32 per-query record that way). Non-32-core runs stamp their own
-      // cpus-suffixed artifact instead.
-      val suffix = if (cpus == "32") "" else s"_c$cpus"
-      persistAtRepoRoot("bench", line, s"BENCH_full_latest$suffix.json")
+      persistAtRepoRoot("bench", line, fullArtifact)
       // the anchor-12 map ALSO lands as its own small durable artifact:
       // three rounds of driver-side stdout parsing came back `parsed:
       // null` despite head+tail anchor emission, so the normative
       // BASELINE.md §B comparison must never depend on stdout at all
-      persistAtRepoRoot("bench", anchorLine, s"BENCH_anchor_latest$suffix.json")
+      persistAtRepoRoot("bench", anchorLine, anchorArtifact)
     }
     spark.stop()
   }
 
+  /** Repo-root (full, anchor) artifact names for a run at `cpus` cores.
+    * The committed round record is the 32-core run; a c8 scaling sweep
+    * run after it used to clobber it (r20 lost its c32 per-query record
+    * that way), so any other core count stamps its own `_c{N}`-suffixed
+    * pair instead.
+    */
+  private[graft] def artifactNames(cpus: String): (String, String) = {
+    val suffix = if (cpus == "32") "" else s"_c$cpus"
+    (s"BENCH_full_latest$suffix.json", s"BENCH_anchor_latest$suffix.json")
+  }
+
+  /** The compact BASELINE.md §B 12-anchor line: `value` is the SUM OF ITS
+    * OWN queries map (the §B comparison number) — a reader of
+    * `metric`+`value` must never get the full-catalog total from a line
+    * whose map is the 12-anchor subset; that number rides under
+    * `full_total`, and `full` names the full artifact of the same run.
+    */
+  private[graft] def anchorLineOf(results: Map[String, Option[Double]], total: Double,
+                                  errors: String, sfDir: String, cpus: String): String = {
+    val anchors = Seq("summary_count", "basic_stats", "histogram_1d",
+      "heatmap_2d", "heavy_hitters", "approx_distinct", "quantiles",
+      "next_k_page", "filter_count", "join_q3lite", "window_rank",
+      "events_time_window")
+    val aqs = anchors.flatMap(a => results.get(a).map(v =>
+      "\"" + a + "\":" + v.map(fmt3).getOrElse("-1.0"))).mkString("{", ",", "}")
+    val anchorTotal = anchors.flatMap(a => results.get(a).flatten).sum
+    s"""{"metric":"anchor12_total","value":${fmt3(anchorTotal)},"unit":"sec","queries":$aqs,"full_total":${fmt3(total)},"errors":$errors,"sf":"$sfDir","cpus":$cpus,"subset":"anchor12_of_${results.size}","full":"${artifactNames(cpus)._1}"}"""
+  }
+
   /** Per-query minimums from the previous committed full-catalog artifact
-    * (repo-root `BENCH_full_latest.json`), for the idle-machine guard —
-    * empty when the file is absent, unparsable, or recorded a DIFFERENT
-    * sf dir (cross-sf comparison would re-sample everything for nothing).
+    * `name`, for the idle-machine guard — empty when the file is absent
+    * or unparsable (see [[comparableMins]]).
+    */
+  private def previousCommitted(name: String, sfDir: String, cpus: String): Map[String, Double] =
+    try {
+      val p = java.nio.file.Paths.get(name)
+      if (!java.nio.file.Files.exists(p)) Map.empty
+      else comparableMins(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"), sfDir, cpus)
+    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+
+  /** The per-query minimums of a full-catalog artifact line — empty when
+    * it recorded a DIFFERENT sf dir (cross-sf comparison would re-sample
+    * everything for nothing) or core count. A legacy artifact without a
+    * `cpus` field predates the `_c{N}` split, so it was a 32-core run.
     * Hand-rolled extraction (no JSON lib on the unmanaged classpath): the
     * artifact is this object's own single-line output, so the quoted-key
     * number-value shape is stable by construction.
     */
-  private def previousCommitted(sfDir: String, cpus: String): Map[String, Double] =
-    try {
-      val suffix = if (cpus == "32") "" else s"_c$cpus"
-      val p = java.nio.file.Paths.get(s"BENCH_full_latest$suffix.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val line = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        // a mismatched sf or core count is not a comparable baseline
-        // (legacy artifacts without a cpus field are accepted as-is)
-        if (!line.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
-        else if ("\"cpus\":([0-9]+)".r.findFirstMatchIn(line)
-                   .exists(_.group(1) != cpus)) Map.empty
-        else {
-          val start = line.indexOf("\"queries\":{")
-          val end = line.indexOf("}", start)
-          if (start < 0 || end < 0) Map.empty
-          else "\"([A-Za-z0-9_]+)\":(-?[0-9.]+)".r
-            .findAllMatchIn(line.substring(start + 11, end))
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filter(_._2 > 0).toMap
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+  private[graft] def comparableMins(line: String, sfDir: String,
+                                    cpus: String): Map[String, Double] = {
+    val recordedCpus = "\"cpus\":([0-9]+)".r.findFirstMatchIn(line).map(_.group(1))
+    val start = line.indexOf("\"queries\":{")
+    val end = line.indexOf("}", start)
+    if (!line.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
+    else if (recordedCpus.getOrElse("32") != cpus) Map.empty
+    else if (start < 0 || end < 0) Map.empty
+    else "\"([A-Za-z0-9_]+)\":(-?[0-9.]+)".r
+      .findAllMatchIn(line.substring(start + 11, end))
+      .map(m => m.group(1) -> m.group(2).toDouble)
+      .filter(_._2 > 0).toMap
+  }
 
   /** µs precision is plenty for wall-clock seconds, and the shorter line
     * raises how many per-query entries survive a truncated stdout capture.

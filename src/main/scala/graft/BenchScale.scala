@@ -271,15 +271,7 @@ object BenchScale {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale/f$factor")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(cpus)
 
     synthesize(spark, srcDir, outDir, factor)
 
@@ -731,8 +723,8 @@ object BenchScale {
       val line = plan.linesIterator.find(l =>
         l.contains("PartitionFilters: [") && !l.contains("PartitionFilters: []") &&
           l.contains("bucket"))
-      val nlist = spark.read
-        .parquet(QueryDefs.ioDir(outDir, indexLeaf) + "/centroids").count()
+      val nlist = graft.operators.Similarity
+        .readCentroids(spark, QueryDefs.ioDir(outDir, indexLeaf)).size
       val probed = line.map { l =>
         val f = l.substring(l.indexOf("PartitionFilters: ["))
         "\\b\\d+\\b".r.findAllIn(f.replaceAll("#\\d+", "")).toSet.size

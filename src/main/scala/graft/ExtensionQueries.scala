@@ -39,18 +39,25 @@ object ExtensionQueries {
         sum(col("n_tokens")).as("total_tokens"))
   }
 
-  /** Build-once memo for the persisted IVF index: the serving contract is
-    * "index built by a prior batch job", so within one harness process the
-    * first invocation builds and every later one (e.g. the bench's second
-    * pass) probes only. Keyed by the scratch path, which is already
-    * per-(process, sf). `computeIfAbsent` is the build-COMPLETION barrier:
-    * a concurrent second caller blocks until the winning build finishes
-    * (a bare Set.add would let it probe a half-written index), and a
-    * failed build stores nothing, so the next invocation rebuilds instead
-    * of serving truncated results.
+  /** Build-once memo for the persisted index artifacts the serve rows
+    * probe: the serving contract is "index built by a prior batch job", so
+    * within one harness process the first invocation builds and every
+    * later one (e.g. the bench's second pass) probes only. Keyed by the
+    * scratch path `ioDir(sfDir, name)`, which is already per-(process,
+    * sf). `computeIfAbsent` is the build-COMPLETION barrier: a concurrent
+    * second caller blocks until the winning build finishes (a bare
+    * Set.add would let it probe a half-written index), and a failed build
+    * stores nothing, so the next invocation rebuilds instead of serving
+    * truncated results. Returns the artifact's directory.
     */
-  private val ivfIndexBuilt =
+  private val indexBuilt =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+
+  private def builtOnce(sfDir: String, name: String)(build: String => Unit): String = {
+    val dir = QueryDefs.ioDir(sfDir, name)
+    indexBuilt.computeIfAbsent(dir, _ => { build(dir); java.lang.Boolean.TRUE })
+    dir
+  }
 
   /** Memoized embeddings row count per sf dir (fixtures are immutable
     * within a harness process): `autoNlist` sizing must not re-scan the
@@ -85,90 +92,65 @@ object ExtensionQueries {
     "similarity_ivfpq_index",          // ivfPqIndexDir
     "similarity_ivfpq_residual")       // ivfPqResIndexDir
 
-  private def ivfIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "ivf_index")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  /** The IVF index over the full embeddings table (the ANN rows). */
+  private def ivfIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "ivf_index") { dir =>
       Similarity.buildIvfIndex(t(s, d, "embeddings"), "vec_id", "embedding",
         dir, nlist = embNlist(s, d))
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+    }
 
-  /** Build-once memo for the persisted IVF-PQ index (same completion-
-    * barrier contract as [[ivfIndexDir]]): coarse buckets + PQ codes, the
+  /** The persisted IVF-PQ index: coarse buckets + PQ codes, the
     * compressed+pruned serving artifact.
     */
-  private def ivfPqIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "ivfpq_index")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  private def ivfPqIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "ivfpq_index") { dir =>
       Pq.buildIvfPqIndex(t(s, d, "embeddings"), "vec_id", "embedding",
         dir, nlist = embNlist(s, d))
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+    }
 
   /** The residual-coded sibling of [[ivfPqIndexDir]] (FAISS IVFADC
-    * shape): same memo contract, own directory.
+    * shape), in its own directory.
     */
-  private def ivfPqResIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "ivfpq_res_index")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  private def ivfPqResIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "ivfpq_res_index") { dir =>
       Pq.buildIvfPqIndex(t(s, d, "embeddings"), "vec_id", "embedding",
         dir, nlist = embNlist(s, d), residual = true)
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+    }
 
-  /** Build-once memo for the persisted MinHash-LSH index (text sibling of
-    * [[ivfIndexDir]], same completion-barrier contract): indexes the 90%
-    * reference split the ingest rows probe.
+  /** The persisted MinHash-LSH index (text sibling of [[ivfIndexDir]]):
+    * indexes the 90% reference split the ingest rows probe.
     */
-  private def lshIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "lsh_index")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  private def lshIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "lsh_index") { dir =>
       Dedup.buildLshIndex(
         t(s, d, "documents").filter(pmod(col("doc_id"), lit(10)) =!= 0),
         "doc_id", "text", dir)
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+    }
 
-  /** Build-once memo for the persisted OLD-corpus clustering LABELS — the
-    * build/serve split for the incremental-fold row (same pattern as the
-    * LSH/IVF indexes): a prior batch job clustered the 90% corpus once
-    * (star CC over its LSH pairs) and wrote (id, rep_id); every nightly
-    * fold reads the label table, never re-clusters the corpus.
+  /** The persisted OLD-corpus clustering LABELS — the build/serve split
+    * for the incremental-fold row: a prior batch job clustered the 90%
+    * corpus once (star CC over its LSH pairs) and wrote (id, rep_id);
+    * every nightly fold reads the label table, never re-clusters the
+    * corpus.
     */
-  private def ccLabelsDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "cc_labels")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  private def ccLabelsDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "cc_labels") { dir =>
       val oldDocs = t(s, d, "documents").filter(pmod(col("doc_id"), lit(10)) =!= 0)
       Dedup.connectedComponentsStar(oldDocs, "doc_id",
           Dedup.minHashLSH(oldDocs, "doc_id", "text", n = 2, threshold = 0.5))
         .write.mode("overwrite").parquet(dir)
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+    }
 
-  /** Build-once memo for the IVF index over the 90% CORPUS split (the
-    * embedding ingest gate's static side — distinct from [[ivfIndexDir]],
-    * which indexes the full table for the ANN rows).
+  /** The IVF index over the 90% CORPUS split (the embedding ingest gate's
+    * static side — distinct from [[ivfIndexDir]], which indexes the full
+    * table for the ANN rows).
     */
-  private def ivfCorpusIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "ivf_corpus_index")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  private def ivfCorpusIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "ivf_corpus_index") { dir =>
       val corpus = t(s, d, "embeddings").filter(pmod(col("vec_id"), lit(10)) =!= 0)
       Similarity.buildIvfIndex(corpus, "vec_id", "embedding", dir,
         nlist = Similarity.autoNlist(corpus.count()))
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+    }
 
   /** Shared DuckDB fragment: distinct word-bigram shingles per doc. */
   private val sqlBigrams =
@@ -345,27 +327,22 @@ object ExtensionQueries {
        |ORDER BY w0.doc_id""".stripMargin
   }
 
-  /** Build-once memo for the pinned-centroid corpus ASSIGNMENT — the
-    * serve-side artifact of the streaming embedding gate (the same
-    * build/serve split as the LSH/IVF index dirs): a batch job assigns
-    * the 90% corpus to the pinned centroids ONCE and persists
-    * (c_id, c_vec, bucket); every gate session reads it back. The
-    * `dedup_stream_embedding_served` row times THIS configuration — the
-    * per-session steady state — while the `_pinned` row keeps timing
-    * build + serve as the cold-start contrast.
+  /** The pinned-centroid corpus ASSIGNMENT — the serve-side artifact of
+    * the streaming embedding gate (the same build/serve split as the
+    * LSH/IVF index dirs): a batch job assigns the 90% corpus to the
+    * pinned centroids ONCE and persists (c_id, c_vec, bucket); every gate
+    * session reads it back. The `dedup_stream_embedding_served` row times
+    * THIS configuration — the per-session steady state — while the
+    * `_pinned` row keeps timing build + serve as the cold-start contrast.
     */
   private def embedAssignDir(s: org.apache.spark.sql.SparkSession, d: String,
-                             cs: Seq[Seq[Double]]): String = {
-    val dir = QueryDefs.ioDir(d, "stream_embed_served_assign")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+                             cs: Seq[Seq[Double]]): String =
+    builtOnce(d, "stream_embed_served_assign") { dir =>
       val corpus = t(s, d, "embeddings")
         .filter(pmod(col("vec_id"), lit(10)) =!= 0)
       graft.streaming.StreamDedup.assignCentroids(corpus, "vec_id", "embedding", cs)
         .write.mode("overwrite").parquet(dir)
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+    }
 
   /** Shared EXACT oracle of the pinned streaming embedding gate —
     * used by BOTH `dedup_stream_embedding_pinned` (build + serve) and

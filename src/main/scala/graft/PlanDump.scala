@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid for the optimization rounds: writes `.explain("formatted")` of
   * selected catalog queries to files, so plan-shape claims (Exchange
   * count, join strategy, PushedFilters/ReadSchema) are auditable without
@@ -26,15 +24,7 @@ object PlanDump {
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq.filter(_.nonEmpty)
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(cpus)
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
         case None => System.err.println(s"[plandump] no such query: $n")

@@ -36,6 +36,23 @@ object SparkEntry {
     }
   }
 
+  /** The local session every main runs on: `local[cpus]` with as many
+    * shuffle partitions, UTC, AQE on, nanosecond parquet timestamps read
+    * as longs (`events.ts`), no UI.
+    */
+  private[graft] def localSession(cpus: String, logLevel: String = "ERROR"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     catalogs.map(q => q.name -> q.fn).toMap

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.SimHashAgg
 
@@ -140,7 +140,6 @@ object Dedup {
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct().cache()
-    val reliable = vertices.sparkSession.sparkContext.getCheckpointDir.isDefined
     var labels = vertices
       .select(col(idCol).cast("long").as("id"))
       .withColumn("rep_id", col("id"))
@@ -164,19 +163,17 @@ object Dedup {
       val tagged = labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("rep_id").as("old_rep"),
           least(col("rep_id"), coalesce(col("nbr_min"), col("rep_id"))).as("rep_id"))
-      val next =
-        if (reliable) tagged.checkpoint(eager = true)
-        else tagged.localCheckpoint(eager = true)
+      val next = Iterative.checkpoint(tagged)
       changed = next.filter(col("rep_id") =!= col("old_rep")).count()
       // `next` no longer reads round iter-1's blocks — release them now,
       // or maxIters label-table copies pile up in storage memory for the
       // life of the session
-      if (prev != null) releaseCheckpoint(prev)
+      if (prev != null) Iterative.releaseCheckpoint(prev)
       prev = if (iter > 0) labels else null // round 0's `labels` is the lazy seed
       labels = next
       iter += 1
     }
-    if (prev != null) releaseCheckpoint(prev)
+    if (prev != null) Iterative.releaseCheckpoint(prev)
     edges.unpersist()
     require(changed == 0,
       s"connectedComponents did not converge in $maxIters rounds — " +
@@ -184,9 +181,6 @@ object Dedup {
         "or use a star-contraction variant")
     labels.select(col("id"), col("rep_id"))
   }
-
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    Iterative.releaseCheckpoint(df)
 
   /** Connected components by alternating star contraction (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond") — the high-diameter
@@ -220,9 +214,6 @@ object Dedup {
   def connectedComponentsStar(vertices: DataFrame, idCol: String,
                               pairs: DataFrame, maxIters: Int = 48): DataFrame = {
     requireIntegralId(vertices, idCol, "connectedComponentsStar")
-    val reliable = vertices.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
 
     // canonical edges: larger id -> smaller id, self-loops dropped
     val init = pairs
@@ -275,19 +266,19 @@ object Dedup {
         .filter(col("c") > 1 || (col("c") > 0 && col("r") > 0))
         .limit(1).count() == 0
 
-    var edges = ckpt(init)
+    var edges = Iterative.checkpoint(init)
     var prev: DataFrame = null
     var done = isStarForest(edges)
     var iter = 0
     while (!done && iter < maxIters) {
-      val next = ckpt(smallStar(largeStar(edges)))
+      val next = Iterative.checkpoint(smallStar(largeStar(edges)))
       done = isStarForest(next)
-      if (prev != null) releaseCheckpoint(prev)
+      if (prev != null) Iterative.releaseCheckpoint(prev)
       prev = edges
       edges = next
       iter += 1
     }
-    if (prev != null) releaseCheckpoint(prev)
+    if (prev != null) Iterative.releaseCheckpoint(prev)
     require(done,
       s"connectedComponentsStar did not converge in $maxIters rounds — " +
         "this exceeds the O(log^2 n) contract; raise maxIters")
@@ -331,8 +322,7 @@ object Dedup {
     * ingest are exactly where diameter grows).
     */
   def incrementalComponents(oldLabels: DataFrame, newIds: DataFrame,
-                            idCol: String, newPairs: DataFrame,
-                            scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+                            idCol: String, newPairs: DataFrame): DataFrame = {
     requireIntegralId(newIds, idCol, "incrementalComponents")
     val old = oldLabels.select(col("id").cast("long").as("id"),
       col("rep_id").cast("long").as("rep_id"))
@@ -353,21 +343,16 @@ object Dedup {
     // but-untruncated, the output plan re-embedded that DAG per reference
     // (305 Exchanges / 2933 plan lines on the served fold row) and
     // Catalyst re-analyzed all of it on every action. Truncation bounds
-    // the plan at a batch-sized leaf; reliable when a checkpoint dir is
-    // set (the connectedComponents durability contract), executor-local
-    // otherwise. `scope` stays in the signature for callers that pinned
-    // through it historically — the checkpoint supersedes it here.
-    val reliable = newPairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
-    val cached = ckpt(contracted)
+    // the plan at a batch-sized leaf (the connectedComponents durability
+    // contract: reliable when a checkpoint dir is set)
+    val cached = Iterative.checkpoint(contracted)
     val touched = cached.select(col("d1").as("id"))
       .union(cached.select(col("d2").as("id"))).distinct()
     // the sub-clustering output is referenced by BOTH final label joins;
     // checkpointing it too keeps the returned plan constant-sized (two
     // joins against two batch-sized leaves) instead of duplicating the
     // CC fixpoint plan per side
-    val sub = ckpt(connectedComponentsStar(touched, "id", cached)
+    val sub = Iterative.checkpoint(connectedComponentsStar(touched, "id", cached)
       .select(col("id").as("t_id"), col("rep_id").as("t_rep")))
     // compose: members of touched old components re-point at the merged
     // rep; everything else keeps its label. One rep-keyed join each side
@@ -505,27 +490,16 @@ object Dedup {
                          rowsPerBand: Int = 4, threshold: Double = 0.5,
                          seed: Long = 42L): DataFrame = {
     graft.functions.VectorExprs.register(train.sparkSession) // native bandSigs
+    val p = LshParams(n, bands, rowsPerBand, seed)
     val edocs = shingleIdArrays(evalSet, idCol, textCol, n)
       .select(col(idCol).as("eval_id"), col("ids").as("e_ids"))
-    val ebuckets = edocs
-      .select(col("eval_id"),
-        explode(bandSigs(col("e_ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col("eval_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
     val tdocs = shingleIdArrays(train, idCol, textCol, n)
-    val tbuckets = tdocs
-      .select(col(idCol), explode(bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-    val cand = tbuckets.join(broadcast(ebuckets), Seq("band", "bsig"))
+    val cand = bandRows(tdocs, idCol, idCol, "ids", p)
+      .join(broadcast(bandRows(edocs, "eval_id", "eval_id", "e_ids", p)), Seq("band", "bsig"))
       .select(col(idCol), col("eval_id")).distinct()
-    cand
-      .join(tdocs, Seq(idCol))
-      .join(broadcast(edocs), Seq("eval_id"))
-      .select(col(idCol), col("eval_id"),
-        size(array_intersect(col("ids"), col("e_ids"))).as("i"),
-        size(col("ids")).as("n1"), size(col("e_ids")).as("n2"))
-      .select(col(idCol), col("eval_id"),
-        (col("i") * lit(1.0) / (col("n1") + col("n2") - col("i"))).as("jacc"))
-      .filter(col("jacc") >= threshold)
+    verifyArrays(
+      cand.join(tdocs, Seq(idCol)).join(broadcast(edocs), Seq("eval_id")),
+      Seq(idCol, "eval_id"), "ids", "e_ids", threshold)
   }
 
   /** All-pairs exact n-gram Jaccard ≥ `threshold` — prefix-filtered
@@ -662,18 +636,11 @@ object Dedup {
                  threshold: Double = 0.5, seed: Long = 42L,
                  scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
     val (docs, cand) = lshStages(df, idCol, textCol, n, bands, rowsPerBand, seed, scope)
-    // exact intersection size via the built-in array_intersect (codegen'd;
-    // no UDF in the plan) — `ids` arrays are distinct by construction
-    // (shingleSet emits distinct shingles), so no-dedup-ambiguity applies
-    cand
-      .join(docs.select(col(idCol).as("d1"), col("ids").as("ids1")), Seq("d1"))
-      .join(docs.select(col(idCol).as("d2"), col("ids").as("ids2")), Seq("d2"))
-      .select(col("d1"), col("d2"),
-        size(array_intersect(col("ids1"), col("ids2"))).as("i"),
-        size(col("ids1")).as("n1"), size(col("ids2")).as("n2"))
-      .select(col("d1"), col("d2"),
-        (col("i") * lit(1.0) / (col("n1") + col("n2") - col("i"))).as("jacc"))
-      .filter(col("jacc") >= threshold)
+    verifyArrays(
+      cand
+        .join(docs.select(col(idCol).as("d1"), col("ids").as("ids1")), Seq("d1"))
+        .join(docs.select(col(idCol).as("d2"), col("ids").as("ids2")), Seq("d2")),
+      Seq("d1", "d2"), "ids1", "ids2", threshold)
   }
 
   /** The LSH candidate stage alone — (d1, d2) pairs whose band signatures
@@ -710,18 +677,11 @@ object Dedup {
                     rowsPerBand: Int = 4, seed: Long = 42L): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.functions.VectorExprs.register(spark) // native bandSigs
-    val cdocs = shingleIdArrays(corpus, idCol, textCol, n)
-    cdocs.select(col(idCol).as("c_id"), col("ids").as("c_ids"))
-      .write.mode("overwrite").parquet(s"$indexDir/arrays")
-    cdocs
-      .select(col(idCol).as("c_id"),
-        explode(bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col("c_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$indexDir/buckets")
     Seq((n, bands, rowsPerBand, seed))
       .toDF("n", "bands", "rows_per_band", "seed")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/params")
+    writeLshTables(corpus, idCol, textCol, indexDir,
+      LshParams(n, bands, rowsPerBand, seed), "overwrite")
   }
 
   /** Incremental maintenance for a [[buildLshIndex]] artifact: append
@@ -734,22 +694,9 @@ object Dedup {
     * gate's accept set is distinct by construction).
     */
   def appendToLshIndex(accepted: DataFrame, idCol: String, textCol: String,
-                       indexDir: String): Unit = {
-    val spark = accepted.sparkSession
-    graft.functions.VectorExprs.register(spark) // native bandSigs
-    val p = spark.read.parquet(s"$indexDir/params").head()
-    val (n, bands, rowsPerBand, seed) =
-      (p.getAs[Int]("n"), p.getAs[Int]("bands"),
-        p.getAs[Int]("rows_per_band"), p.getAs[Long]("seed"))
-    val cdocs = shingleIdArrays(accepted, idCol, textCol, n)
-    cdocs.select(col(idCol).as("c_id"), col("ids").as("c_ids"))
-      .write.mode("append").parquet(s"$indexDir/arrays")
-    cdocs
-      .select(col(idCol).as("c_id"),
-        explode(bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col("c_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-      .write.mode("append").partitionBy("band").parquet(s"$indexDir/buckets")
-  }
+                       indexDir: String): Unit =
+    writeLshTables(accepted, idCol, textCol, indexDir,
+      readLshParams(accepted.sparkSession, indexDir), "append")
 
   /** Near-dup PAIRS for an ingest batch against a persisted
     * [[buildLshIndex]] artifact — the pair-producing probe the
@@ -771,31 +718,20 @@ object Dedup {
                     idCol: String, textCol: String, indexDir: String,
                     threshold: Double = 0.5): DataFrame = {
     graft.functions.VectorExprs.register(spark) // native bandSigs
-    val p = spark.read.parquet(s"$indexDir/params").head()
-    val (n, bands, rowsPerBand, seed) =
-      (p.getAs[Int]("n"), p.getAs[Int]("bands"),
-        p.getAs[Int]("rows_per_band"), p.getAs[Long]("seed"))
-    val ndocs = shingleIdArrays(batch, idCol, textCol, n)
-    val nbuckets = ndocs
-      .select(col(idCol).as("n_id"),
-        explode(bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col("n_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-    val cand = nbuckets
-      .join(spark.read.parquet(s"$indexDir/buckets"), Seq("band", "bsig"))
+    val p = readLshParams(spark, indexDir)
+    val (buckets, arrays) = readLshTables(spark, indexDir)
+    val ndocs = shingleIdArrays(batch, idCol, textCol, p.n)
+    val cand = bandRows(ndocs, idCol, "n_id", "ids", p)
+      .join(buckets, Seq("band", "bsig"))
       .select(col("n_id"), col("c_id")).distinct()
-    val batchVsCorpus = cand
-      .join(spark.read.parquet(s"$indexDir/arrays"), Seq("c_id"))
-      .join(ndocs.select(col(idCol).as("n_id"), col("ids").as("n_ids")), Seq("n_id"))
-      .select(col("n_id"), col("c_id"),
-        size(array_intersect(col("n_ids"), col("c_ids"))).as("i"),
-        size(col("n_ids")).as("n1"), size(col("c_ids")).as("n2"))
-      .select(col("n_id"), col("c_id"),
-        (col("i") * lit(1.0) / (col("n1") + col("n2") - col("i"))).as("jacc"))
-      .filter(col("jacc") >= threshold)
+    val batchVsCorpus = verifyArrays(
+      cand.join(arrays, Seq("c_id"))
+        .join(ndocs.select(col(idCol).as("n_id"), col("ids").as("n_ids")), Seq("n_id")),
+      Seq("n_id", "c_id"), "n_ids", "c_ids", threshold)
       .select(least(col("n_id"), col("c_id")).as("d1"),
         greatest(col("n_id"), col("c_id")).as("d2"), col("jacc"))
-    val batchVsBatch = minHashLSH(batch, idCol, textCol, n, bands,
-      rowsPerBand, threshold, seed)
+    val batchVsBatch = minHashLSH(batch, idCol, textCol, p.n, p.bands,
+      p.rowsPerBand, threshold, p.seed)
     batchVsCorpus.union(batchVsBatch.select(col("d1"), col("d2"), col("jacc")))
   }
 
@@ -842,6 +778,80 @@ object Dedup {
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(xxhash64(col("sh")))).as("ids"))
 
+  /** The banding of every MinHash-LSH path: shingle size `n` and the
+    * (bands × rowsPerBand, seed) signature scheme. A persisted index
+    * records its own in `indexDir/params`.
+    */
+  private[graft] final case class LshParams(n: Int, bands: Int, rowsPerBand: Int, seed: Long)
+
+  /** One (`idOut`, band, bsig) row per band of every doc in `docs`, from
+    * its sorted shingle-hash array `idsCol` — band signatures are
+    * computed per row (map-side only); a doc with no shingles has no
+    * rows.
+    */
+  private[graft] def bandRows(docs: DataFrame, idCol: String, idOut: String,
+                              idsCol: String, p: LshParams): DataFrame =
+    docs.select(col(idCol).as(idOut),
+        explode(bandSigs(col(idsCol), p.bands, p.rowsPerBand, p.seed)).as("bk"))
+      .select(col(idOut), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
+
+  /** The exact-Jaccard terms of two sorted shingle-hash arrays:
+    * intersection size and both set sizes. The intersection is the
+    * built-in, codegen'd `array_intersect` (no UDF in the plan) — the
+    * arrays are distinct by construction (shingleSet emits distinct
+    * shingles), so no dedup ambiguity applies.
+    */
+  private[graft] def jaccardTerms(a: Column, b: Column): (Column, Column, Column) =
+    (size(array_intersect(a, b)), size(a), size(b))
+
+  private[graft] def jaccard(i: Column, n1: Column, n2: Column): Column =
+    i * lit(1.0) / (n1 + n2 - i)
+
+  /** Exact-Jaccard verification of candidate rows carrying both docs'
+    * shingle-hash arrays `a` and `b`: `keys` plus `jacc`, kept at
+    * `jacc >= threshold`.
+    */
+  private def verifyArrays(cand: DataFrame, keys: Seq[String], a: String, b: String,
+                           threshold: Double): DataFrame = {
+    val (i, n1, n2) = jaccardTerms(col(a), col(b))
+    val ks = keys.map(col)
+    cand.select(ks :+ i.as("i") :+ n1.as("n1") :+ n2.as("n2"): _*)
+      .select(ks :+ jaccard(col("i"), col("n1"), col("n2")).as("jacc"): _*)
+      .filter(col("jacc") >= threshold)
+  }
+
+  /** A corpus's LSH index tables: (c_id, band, bsig) buckets and
+    * (c_id, c_ids) verify arrays — what [[buildLshIndex]] persists, and
+    * what the fused ingest gate joins in-plan.
+    */
+  private[graft] def lshTables(corpus: DataFrame, idCol: String, textCol: String,
+                               p: LshParams): (DataFrame, DataFrame) = {
+    val cdocs = shingleIdArrays(corpus, idCol, textCol, p.n)
+    (bandRows(cdocs, idCol, "c_id", "ids", p),
+      cdocs.select(col(idCol).as("c_id"), col("ids").as("c_ids")))
+  }
+
+  /** Writes `docs`' [[lshTables]] under `indexDir` (buckets partitioned
+    * by band) — the build (overwrite) and the append share it.
+    */
+  private def writeLshTables(docs: DataFrame, idCol: String, textCol: String,
+                             indexDir: String, p: LshParams, mode: String): Unit = {
+    graft.functions.VectorExprs.register(docs.sparkSession) // native bandSigs
+    val (buckets, arrays) = lshTables(docs, idCol, textCol, p)
+    arrays.write.mode(mode).parquet(s"$indexDir/arrays")
+    buckets.write.mode(mode).partitionBy("band").parquet(s"$indexDir/buckets")
+  }
+
+  private[graft] def readLshParams(spark: SparkSession, indexDir: String): LshParams = {
+    val r = spark.read.parquet(s"$indexDir/params").head()
+    LshParams(r.getAs[Int]("n"), r.getAs[Int]("bands"),
+      r.getAs[Int]("rows_per_band"), r.getAs[Long]("seed"))
+  }
+
+  /** The persisted (buckets, arrays) of a [[buildLshIndex]] artifact. */
+  private[graft] def readLshTables(spark: SparkSession, indexDir: String): (DataFrame, DataFrame) =
+    (spark.read.parquet(s"$indexDir/buckets"), spark.read.parquet(s"$indexDir/arrays"))
+
   /** Shared LSH pipeline prefix: per-doc sorted shingle-hash arrays and
     * the band-collision candidate pairs over them.
     */
@@ -850,11 +860,7 @@ object Dedup {
                         scope: graft.CacheScope): (DataFrame, DataFrame) = {
     graft.functions.VectorExprs.register(df.sparkSession) // native bandSigs
     val docs = scope.pin(shingleIdArrays(df, idCol, textCol, n))
-    // band signature = hash of the band's rowsPerBand min-rehashes,
-    // computed per row from the hash array (map-side only)
-    val buckets = docs
-      .select(col(idCol), explode(bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
+    val buckets = bandRows(docs, idCol, idCol, "ids", LshParams(n, bands, rowsPerBand, seed))
     val cand = buckets.as("l").join(buckets.as("r"), Seq("band", "bsig"))
       .filter(col(s"l.$idCol") < col(s"r.$idCol"))
       .select(col(s"l.$idCol").as("d1"), col(s"r.$idCol").as("d2"))

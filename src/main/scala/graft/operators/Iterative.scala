@@ -14,6 +14,16 @@ import org.apache.spark.sql.Dataset
   * whose files the ContextCleaner reclaims when the RDD is collected.)
   */
 private[operators] object Iterative {
+
+  /** Eager, lineage-truncating checkpoint of one round's frame: RELIABLE
+    * (checkpoint-dir backed, survives executor loss) when the session has
+    * a checkpoint dir set, executor-local otherwise — the single-JVM fast
+    * path.
+    */
+  def checkpoint[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint(eager = true)
+    else ds.localCheckpoint(eager = true)
+
   def releaseCheckpoint(ds: Dataset[_]): Unit =
     ds.queryExecution.logical.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd

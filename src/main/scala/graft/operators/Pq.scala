@@ -712,11 +712,8 @@ object Pq {
                       residual: Boolean = false): Unit = {
     val spark = emb.sparkSession
     graft.functions.VectorExprs.register(spark)
-    import spark.implicits._
     val cents = Similarity.trainCentroids(emb, idCol, vecCol, nlist, seed)
-    cents.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("bucket", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
+    Similarity.writeCentroids(spark, cents, indexDir)
     val csArr: Array[Array[Double]] = cents.map(_.toArray)
     val cb =
       if (!residual) train(emb, idCol, vecCol, m, ksub, seed)
@@ -785,9 +782,7 @@ object Pq {
     val spark = queries.sparkSession
     graft.functions.VectorExprs.register(spark)
     val cb = loadCodebooks(spark, indexDir)
-    val cs: Array[Array[Double]] = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("bucket")).select(col("centroid"))
-      .collect().map(_.getSeq[Double](0).toArray) // nlist rows — sketch-sized
+    val cs = Similarity.readCentroids(spark, indexDir).map(_.toArray).toArray
     val markerPath = new org.apache.hadoop.fs.Path(s"$indexDir/_RESIDUAL")
     val residual = markerPath.getFileSystem(
       spark.sessionState.newHadoopConf()).exists(markerPath)

@@ -595,20 +595,13 @@ object Similarity {
                                         seed: Long): Array[Array[Double]] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    // reliable checkpoints when the session has a checkpoint dir (the
-    // connectedComponents durability contract: executor-local blocks die
-    // with an executor, which on a real cluster kills a mid-init build);
-    // the localCheckpoint default remains the single-JVM fast path
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def ckpt[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] =
-      if (reliable) ds.checkpoint(eager = true) else ds.localCheckpoint(eager = true)
     val base = emb
       .select(xxhash64(col(idCol), lit(seed)).as("h"), col(vecCol).as("v"))
       .as[(Long, Array[Float])]
     val seedVec = base.orderBy(col("h")).limit(1)
       .collect().head._2.map(_.toDouble)
     val cand = scala.collection.mutable.ArrayBuffer[Array[Double]](seedVec)
-    var pts = ckpt(base.map { case (h, v) => (h, v, l2f(v, seedVec)) })
+    var pts = Iterative.checkpoint(base.map { case (h, v) => (h, v, l2f(v, seedVec)) })
     var round = 1
     var exhausted = false
     while (round <= kmeansParRounds && !exhausted && cand.length < maxInitCandidates) {
@@ -631,7 +624,7 @@ object Similarity {
         else {
           cand ++= added
           val bc = spark.sparkContext.broadcast(added)
-          val next = ckpt(pts.map { case (h, v, d) =>
+          val next = Iterative.checkpoint(pts.map { case (h, v, d) =>
             val cs = bc.value
             var best = d; var i = 0
             while (i < cs.length) { val t = l2f(v, cs(i)); if (t < best) best = t; i += 1 }
@@ -851,18 +844,9 @@ object Similarity {
   def buildIvfIndex(emb: DataFrame, idCol: String, vecCol: String,
                     indexDir: String, nlist: Int = 16, seed: Long = 42L): Unit = {
     graft.functions.VectorExprs.register(emb.sparkSession)
-    val spark = emb.sparkSession
-    import spark.implicits._
     val refined = trainCentroids(emb, idCol, vecCol, nlist, seed)
-    refined.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("bucket", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val cs: Seq[Seq[Double]] = refined.toSeq.map(_.toSeq)
-    import graft.functions.VectorExprs.nearestCentroids
-    emb.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-      .withColumn("bucket", element_at(nearestCentroids(col("n_vec"), cs, 1), 1))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$indexDir/assignments")
+    writeCentroids(emb.sparkSession, refined, indexDir)
+    writeAssignments(emb, idCol, vecCol, refined.toSeq.map(_.toSeq), indexDir, "overwrite")
   }
 
   /** Incremental maintenance for a [[buildIvfIndex]] artifact: assign
@@ -882,16 +866,47 @@ object Similarity {
                        indexDir: String): Unit = {
     val spark = accepted.sparkSession
     graft.functions.VectorExprs.register(spark)
-    import graft.functions.VectorExprs.nearestCentroids
-    val cs: Seq[Seq[Double]] = spark.read.parquet(s"$indexDir/centroids")
+    writeAssignments(accepted, idCol, vecCol, readCentroids(spark, indexDir),
+      indexDir, "append")
+  }
+
+  /** The index's coarse quantizer: `indexDir/centroids`, one
+    * (bucket, centroid array<double>) row per list — shared by every IVF
+    * and IVF-PQ index.
+    */
+  private[graft] def writeCentroids(spark: org.apache.spark.sql.SparkSession,
+                                    cents: Array[Array[Double]], indexDir: String): Unit = {
+    import spark.implicits._
+    cents.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+      .toDF("bucket", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
+  }
+
+  /** The stored centroids in bucket order (nlist rows — sketch-sized). */
+  private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
+                                   indexDir: String): Seq[Seq[Double]] =
+    spark.read.parquet(s"$indexDir/centroids")
       .orderBy(col("bucket"))
       .select(col("centroid"))
       .collect().map(_.getSeq[Double](0): Seq[Double]).toSeq
-    accepted.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
+
+  /** Writes each vector's nearest-centroid assignment (n_id, n_vec) under
+    * `indexDir/assignments`, Hive-partitioned by bucket — the build
+    * (overwrite) and the append share it.
+    */
+  private def writeAssignments(emb: DataFrame, idCol: String, vecCol: String,
+                               cs: Seq[Seq[Double]], indexDir: String, mode: String): Unit = {
+    import graft.functions.VectorExprs.nearestCentroids
+    emb.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
       .withColumn("bucket", element_at(nearestCentroids(col("n_vec"), cs, 1), 1))
-      .write.mode("append").partitionBy("bucket")
+      .write.mode(mode).partitionBy("bucket")
       .parquet(s"$indexDir/assignments")
   }
+
+  /** The stored (n_id, n_vec, bucket) assignments of an IVF index. */
+  private[graft] def readAssignments(spark: org.apache.spark.sql.SparkSession,
+                                     indexDir: String): DataFrame =
+    spark.read.parquet(s"$indexDir/assignments")
 
   /** Probe-only IVF top-k against a persisted `buildIvfIndex` artifact: no
     * Lloyd pass, no assignment pass — the executed plan is two parquet
@@ -908,10 +923,7 @@ object Similarity {
     val spark = queries.sparkSession
     graft.functions.VectorExprs.register(spark)
     import graft.functions.VectorExprs.nearestCentroids
-    val cs: Seq[Seq[Double]] = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("bucket"))
-      .select(col("centroid"))
-      .collect().map(_.getSeq[Double](0): Seq[Double]).toSeq
+    val cs = readCentroids(spark, indexDir)
     // materialize the query batch ONCE (sketch-sized by contract): the
     // batch feeds both the probed-bucket collection and the candidate
     // join, and leaving it lazy would re-execute the whole query-side
@@ -930,7 +942,7 @@ object Similarity {
       .withColumn("bucket", explode(nearestCentroids(col("q_vec"), cs, nprobe)))
     val probed = q.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val corpus = spark.read.parquet(s"$indexDir/assignments")
+    val corpus = readAssignments(spark, indexDir)
       .filter(col("bucket").isin(probed.map(Int.box).toIndexedSeq: _*))
     val cand = observeCandidates(
       q.join(corpus, Seq("bucket"))
@@ -1103,7 +1115,7 @@ object Similarity {
     require(nprobe >= 1, s"ivfDupPairsFromIndex needs nprobe >= 1, got $nprobe")
     graft.functions.VectorExprs.register(spark)
     import graft.functions.VectorExprs.nearestCentroids
-    val assigned = spark.read.parquet(s"$indexDir/assignments")
+    val assigned = readAssignments(spark, indexDir)
       .select(col("n_id").cast("long").as("id"), col("n_vec").as("vec"),
         col("bucket"))
     // probe 1 IS the stored assignment (the Hive partition column, read
@@ -1117,9 +1129,7 @@ object Similarity {
     val tagged =
       if (nprobe <= 1) assigned
       else {
-        val cs: Seq[Seq[Double]] = spark.read.parquet(s"$indexDir/centroids")
-          .orderBy(col("bucket")).select(col("centroid"))
-          .collect().map(_.getSeq[Double](0): Seq[Double]).toSeq
+        val cs = readCentroids(spark, indexDir)
         assigned.select(col("id"), col("vec"),
           explode(concat(array(col("bucket")),
             slice(nearestCentroids(col("vec"), cs, nprobe), 2, nprobe - 1)))

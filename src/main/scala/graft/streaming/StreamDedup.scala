@@ -112,17 +112,11 @@ object StreamDedup {
                          n: Int = 2, bands: Int = 8, rowsPerBand: Int = 4,
                          threshold: Double = 0.5, seed: Long = 42L): DataFrame = {
     graft.functions.VectorExprs.register(corpus.sparkSession) // native bandSigs
-    // static side: per-doc shingle arrays + band buckets (the "index"
-    // `Dedup.buildLshIndex` persists; docs with no shingles have no
-    // buckets)
-    val cdocs = Dedup.shingleIdArrays(corpus, idCol, textCol, n)
-    val cbuckets = cdocs
-      .select(col(idCol).as("c_id"),
-        explode(Dedup.bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col("c_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-    val carrs = cdocs.select(col(idCol).as("c_id"), col("ids").as("c_ids"))
-    flagAgainst(cbuckets, carrs, incoming, idCol, textCol,
-      n, bands, rowsPerBand, threshold, seed)
+    // static side: the index tables `Dedup.buildLshIndex` persists,
+    // derived in-plan
+    val p = Dedup.LshParams(n, bands, rowsPerBand, seed)
+    val (cbuckets, carrs) = Dedup.lshTables(corpus, idCol, textCol, p)
+    flagAgainst(cbuckets, carrs, incoming, idCol, textCol, p, threshold)
   }
 
   /** Serve-side twin of [[dedupAgainstCorpus]] probing a PERSISTED
@@ -138,14 +132,9 @@ object StreamDedup {
   def dedupAgainstLshIndex(spark: SparkSession, incoming: DataFrame,
                            idCol: String, textCol: String, indexDir: String,
                            threshold: Double = 0.5): DataFrame = {
-    val p = spark.read.parquet(s"$indexDir/params").head()
-    val (n, bands, rowsPerBand, seed) =
-      (p.getAs[Int]("n"), p.getAs[Int]("bands"),
-        p.getAs[Int]("rows_per_band"), p.getAs[Long]("seed"))
-    flagAgainst(
-      spark.read.parquet(s"$indexDir/buckets"),
-      spark.read.parquet(s"$indexDir/arrays"),
-      incoming, idCol, textCol, n, bands, rowsPerBand, threshold, seed)
+    val p = Dedup.readLshParams(spark, indexDir)
+    val (cbuckets, carrs) = Dedup.readLshTables(spark, indexDir)
+    flagAgainst(cbuckets, carrs, incoming, idCol, textCol, p, threshold)
   }
 
   /** Shared tail of the fused and index-served ingest forms: map-side
@@ -155,14 +144,13 @@ object StreamDedup {
     */
   private def flagAgainst(cbuckets: DataFrame, carrs: DataFrame,
                           incoming: DataFrame, idCol: String, textCol: String,
-                          n: Int, bands: Int, rowsPerBand: Int,
-                          threshold: Double, seed: Long): DataFrame = {
+                          p: Dedup.LshParams, threshold: Double): DataFrame = {
     graft.functions.VectorExprs.register(incoming.sparkSession) // native bandSigs
     // stream side: shingle-hash array and band signatures per ROW —
     // `array_distinct` over hashes mirrors shingleSet's distinct-shingle
     // contract (identical sets absent 64-bit collisions); the token array
     // materializes first per the HOF re-evaluation rule in TextOps
-    val sh = if (n == 1) col("__toks") else TextOps.shingles(col("__toks"), n)
+    val sh = if (p.n == 1) col("__toks") else TextOps.shingles(col("__toks"), p.n)
     val withIds = incoming
       .select(col(idCol).as("s_id"), TextOps.tokens(col(textCol)).as("__toks"))
       .select(col("s_id"),
@@ -170,7 +158,7 @@ object StreamDedup {
     val sBands = withIds.select(
       col("s_id"), col("s_ids"),
       explode_outer(when(size(col("s_ids")) > 0,
-        Dedup.bandSigs(col("s_ids"), bands, rowsPerBand, seed))).as("bk"))
+        Dedup.bandSigs(col("s_ids"), p.bands, p.rowsPerBand, p.seed))).as("bk"))
       .select(col("s_id"), col("s_ids"),
         col("bk.band").as("band"), col("bk.bsig").as("bsig"))
 
@@ -180,8 +168,8 @@ object StreamDedup {
       .join(carrs, Seq("c_id"), "left")
       .select(col("s_id"),
         when(col("c_ids").isNotNull, {
-          val i = size(array_intersect(col("s_ids"), col("c_ids")))
-          i * lit(1.0) / (size(col("s_ids")) + size(col("c_ids")) - i)
+          val (i, n1, n2) = Dedup.jaccardTerms(col("s_ids"), col("c_ids"))
+          Dedup.jaccard(i, n1, n2)
         }).as("jacc"),
         col("c_id"))
 
@@ -290,11 +278,8 @@ object StreamDedup {
                                     indexDir: String, nprobe: Int = 4,
                                     threshold: Double = 0.45): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    val cs: Seq[Seq[Double]] = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("bucket"))
-      .select(col("centroid"))
-      .collect().map(_.getSeq[Double](0): Seq[Double]).toSeq
-    val cbuckets = spark.read.parquet(s"$indexDir/assignments")
+    val cs = Similarity.readCentroids(spark, indexDir)
+    val cbuckets = Similarity.readAssignments(spark, indexDir)
       .select(col("n_id").as("c_id"), col("n_vec").as("c_vec"), col("bucket"))
     flagEmbedding(cbuckets, incoming, idCol, vecCol, cs, nprobe, threshold)
   }

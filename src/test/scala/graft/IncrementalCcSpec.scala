@@ -52,18 +52,32 @@ class IncrementalCcSpec extends SparkSpec {
 
   test("lshIndexPairs: index probe equals the full-LSH pair set restricted to the batch") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val oldDocs = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-    val newDocs = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_pairs").toString
-    Dedup.buildLshIndex(oldDocs, "doc_id", "text", dir)
-    val probed = Dedup.lshIndexPairs(spark, newDocs, "doc_id", "text", dir)
-      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val isNew = (c: org.apache.spark.sql.Column) => pmod(c, lit(10)) === 0
-    val want = Dedup.minHashLSH(docs, "doc_id", "text", n = 2, threshold = 0.5)
-      .filter(isNew(col("d1")) || isNew(col("d2")))
-      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(probed == want,
-      s"probe-only: ${(probed -- want).take(5)}; full-only: ${(want -- probed).take(5)}")
+    def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    type Split = org.apache.spark.sql.Column => org.apache.spark.sql.Column
+    def docsIn(split: Split) = docs.filter(split(pmod(col("doc_id"), lit(10))))
+    // probe `batch` against an index built over `base`, then appended with
+    // `appended`: must equal full-corpus minHashLSH over the union,
+    // restricted to pairs touching the batch
+    def check(base: Split, appended: Option[Split], batch: Split): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_lsh_pairs").toString
+      Dedup.buildLshIndex(docsIn(base), "doc_id", "text", dir)
+      appended.foreach(a => Dedup.appendToLshIndex(docsIn(a), "doc_id", "text", dir))
+      val probed = pairsOf(Dedup.lshIndexPairs(spark, docsIn(batch), "doc_id", "text", dir))
+      val inBatch = (c: org.apache.spark.sql.Column) => batch(pmod(c, lit(10)))
+      val union: Split = r => appended.foldLeft(base(r) || batch(r))(_ || _(r))
+      val want = pairsOf(
+        Dedup.minHashLSH(docsIn(union), "doc_id", "text", n = 2, threshold = 0.5)
+          .filter(inBatch(col("d1")) || inBatch(col("d2"))))
+      assert(want.nonEmpty)
+      assert(probed == want,
+        s"probe-only: ${(probed -- want).take(5)}; full-only: ${(want -- probed).take(5)}")
+    }
+    // index built over the 90% split, probed by the 10% batch
+    check(_ =!= 0, None, _ === 0)
+    // the ingest cycle: build over the base split, append one accepted
+    // batch, then probe the next batch against the appended index
+    check(r => r =!= 0 && r =!= 5, Some(_ === 5), _ === 0)
   }
 
   test("chained ingest: two successive batches still equal full recluster") {
