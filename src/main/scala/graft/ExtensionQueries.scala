@@ -838,11 +838,13 @@ object ExtensionQueries {
     // clustered; the batch (doc_id % 10 = 0) arrives with its LSH pairs
     // (new-vs-corpus + new-vs-new — banding is per-pair, so the full-LSH
     // filter used here produces EXACTLY the pair set an index probe
-    // yields in production), and incrementalComponents runs CC on the
-    // batch-sized contracted subgraph only. The final labels equal a
-    // from-scratch recluster of the union, so the oracle is sqlDocGroups
-    // VERBATIM — the strongest possible check for an incremental
-    // operator: its shortcut is invisible in the output.
+    // yields in production), and incrementalComponents collects the
+    // batch-sized contracted subgraph once, solves it on the driver
+    // (min-id union-find) and re-labels the corpus with one rep-keyed
+    // join. The final labels equal a from-scratch recluster of the union,
+    // so the oracle is sqlDocGroups VERBATIM — the strongest possible
+    // check for an incremental operator: its shortcut is invisible in the
+    // output.
     Q("dedup_groups_incremental", sqlDocGroups) {
       (s, d) =>
         val docs = t(s, d, "documents")
@@ -867,9 +869,10 @@ object ExtensionQueries {
     // from scratch before folding); this row is the actual nightly cost:
     // labels and LSH index are persisted build-job artifacts (memoized,
     // the IVF build/serve precedent), so query time = probe the stored
-    // buckets with the 10% batch + CC on the batch-sized contracted
-    // subgraph + one label join. Same from-scratch-recluster oracle —
-    // the serving shortcut must be invisible in the output.
+    // buckets with the 10% batch + a driver-side union-find over the
+    // batch-sized contracted subgraph + one label join. Same
+    // from-scratch-recluster oracle — the serving shortcut must be
+    // invisible in the output.
     Q("dedup_groups_incremental_fold", sqlDocGroups) {
       (s, d) =>
         val labels = s.read.parquet(ccLabelsDir(s, d))

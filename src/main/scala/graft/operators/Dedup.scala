@@ -312,14 +312,19 @@ object Dedup {
     * pinned in the spec, including the case where one new doc BRIDGES
     * two previously-separate old components).
     *
-    * Scale shape (the reason this exists): the iterative CC loop — the
-    * expensive, hard-to-scale part — runs on the touched subgraph only
-    * (≤ 2·|newPairs| vertices); the corpus-sized work is ONE linear
-    * rep-keyed broadcast-able join to re-label members of merged
-    * components. A nightly 0.1% ingest thus pays 0.1%-sized clustering,
-    * not a full recluster. Uses [[connectedComponentsStar]] for the
-    * subgraph (diameter-robust; chains of merges across many rounds of
-    * ingest are exactly where diameter grows).
+    * Scale shape (the reason this exists): connectivity is solved on the
+    * touched subgraph only (≤ 2·|newPairs| vertices), and that subgraph is
+    * ingest-batch-sized by contract, so it is solved on the DRIVER: the
+    * contracted edge list is collected once and folded by a min-id
+    * union-find (path compression; the smaller root wins, so every root
+    * is its component's minimum). The fold persists nothing: no cache
+    * or checkpoint outlives the call, so a serving loop of folds holds no
+    * executor storage. The corpus-sized work is ONE linear rep-keyed
+    * join per side against the resulting (t_id, t_rep) map, a local
+    * relation and therefore a broadcast-able leaf. A nightly 0.1% ingest
+    * thus pays 0.1%-sized clustering, not a full recluster. The driver holds
+    * O(|newPairs|) longs; a batch whose pair set outgrows the driver
+    * fails loudly at the collect on `spark.driver.maxResultSize`.
     */
   def incrementalComponents(oldLabels: DataFrame, newIds: DataFrame,
                             idCol: String, newPairs: DataFrame): DataFrame = {
@@ -336,27 +341,14 @@ object Dedup {
       .select(coalesce(col("ra"), col("a")).as("d1"),
         coalesce(col("rb"), col("b")).as("d2"))
       .filter(col("d1") =!= col("d2"))
-    // the touched subgraph is ingest-batch-sized: CHECKPOINT it (not just
-    // pin) — its plan embeds the whole pair-producer DAG (an LSH index
-    // probe + verify at serving time) and is referenced by the vertex
-    // derivation (twice), the CC loop and the final label joins; pinned-
-    // but-untruncated, the output plan re-embedded that DAG per reference
-    // (305 Exchanges / 2933 plan lines on the served fold row) and
-    // Catalyst re-analyzed all of it on every action. Truncation bounds
-    // the plan at a batch-sized leaf (the connectedComponents durability
-    // contract: reliable when a checkpoint dir is set)
-    val cached = Iterative.checkpoint(contracted)
-    val touched = cached.select(col("d1").as("id"))
-      .union(cached.select(col("d2").as("id"))).distinct()
-    // the sub-clustering output is referenced by BOTH final label joins;
-    // checkpointing it too keeps the returned plan constant-sized (two
-    // joins against two batch-sized leaves) instead of duplicating the
-    // CC fixpoint plan per side
-    val sub = Iterative.checkpoint(connectedComponentsStar(touched, "id", cached)
-      .select(col("id").as("t_id"), col("rep_id").as("t_rep")))
+    // the touched subgraph is ingest-batch-sized: collect its edges once
+    // (running the pair-producer DAG once) and solve it on the driver
+    val edges = contracted.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val sub = oldLabels.sparkSession.createDataFrame(minIdComponents(edges))
+      .toDF("t_id", "t_rep")
     // compose: members of touched old components re-point at the merged
     // rep; everything else keeps its label. One rep-keyed join each side
-    // (sub is batch-sized — broadcast-able at real scale).
+    // (sub is a batch-sized local relation — broadcast-able).
     val updatedOld = old
       .join(sub, old("rep_id") === sub("t_id"), "left")
       .select(col("id"), coalesce(col("t_rep"), col("rep_id")).as("rep_id"))
@@ -364,6 +356,27 @@ object Dedup {
       .join(sub, fresh("id") === sub("t_id"), "left")
       .select(col("id"), coalesce(col("t_rep"), col("id")).as("rep_id"))
     updatedOld.union(updatedNew)
+  }
+
+  /** Connected components of a driver-side edge list: (vertex, component
+    * minimum) for every vertex that appears in an edge. Union-find with
+    * path compression where the smaller root always wins, so a root is
+    * its component's minimum id.
+    */
+  private def minIdComponents(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var root = parent.getOrElseUpdate(x, x)
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toSeq.map(x => x -> find(x))
   }
 
   /** The corpus-level dedup TRANSFORM: keep exactly one representative

@@ -128,6 +128,10 @@ class PlanGuardSpec extends SparkSpec {
       // trainMerges: the top-maxWords frequency table (capped — the
       // k-means-sample precedent; the merge loop is driver arithmetic)
       "Bpe.scala"           -> 1,
+      // incrementalComponents: the contracted edge list of one ingest
+      // batch (≤ |newPairs| rows by contract), folded by a driver
+      // union-find; an oversized batch fails on spark.driver.maxResultSize
+      "Dedup.scala"         -> 1,
       // scale-invariant checks, not operators: funnel step counts (3
       // rows), retention cohort cells (tens of rows), theta overlap
       // cells (type-pairs), and weekly KLL quantiles (weeks) collected
